@@ -103,10 +103,12 @@ def classpath():
 
 
 def java_cmd(cp, work, args):
+    # -Xms1g: started from G1's default (1/64 of memory) the heap grows in
+    # timing-dependent steps, and one run's peak RSS swung from 1.3 to 2.2 GB
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     opens = [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    return (["java", "-Xmx3g"] + opens +
+    return (["java", "-Xms1g", "-Xmx3g"] + opens +
             ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
              f"-Dspark.local.dir={tmp}", f"-Djava.io.tmpdir={tmp}",
              "-Dlog4j2.configurationFile=" + os.path.join(HERE, "conf", "log4j2.properties"),

@@ -20,8 +20,8 @@ final case class GenFile(name: String, firstOffset: Long, count: Int,
   * versions and the model is simply "latest offset per key".
   *
   * Mix: 80 % updates of live keys, 15 % inserts (a quarter of them
-  * re-insert a deleted key), 5 % keyed tombstones. Keys are uniform over
-  * the live set, or skewed toward the newest orders when `recent` is set.
+  * re-insert a deleted key), 5 % keyed tombstones, over keys chosen
+  * uniformly from the live set.
   */
 final class Gen(val seed: Long, topicDir: String) {
   private val rnd = new java.util.SplittableRandom(seed)
@@ -56,21 +56,9 @@ final class Gen(val seed: Long, topicDir: String) {
     liveArr(p) = last; livePos(last) = p; nLive -= 1; livePos(k) = -1
     latest(k) = -1L
   }
-  def isLive(k: Int): Boolean = k < livePos.length && livePos(k) >= 0
   def liveKeys: Iterator[Int] = (0 until nLive).iterator.map(liveArr(_))
 
-  private def pickLive(recent: Boolean): Int = {
-    if (recent) {
-      var tries = 0
-      while (tries < 4) {
-        val u = rnd.nextDouble()
-        val k = maxKey - (maxKey * u * u * u * u).toInt
-        if (isLive(k)) return k
-        tries += 1
-      }
-    }
-    liveArr(rnd.nextInt(nLive))
-  }
+  private def pickLive(): Int = liveArr(rnd.nextInt(nLive))
 
   /** Payload fields of the row version written at `offset`. */
   def payload(key: Int, offset: Long): Gen.Row = {
@@ -140,7 +128,7 @@ final class Gen(val seed: Long, topicDir: String) {
 
   /** Write one file of `n` change events. Event i is stamped with due
     * time `due0 + i * step` (wall-clock ms) in the log, never in the file. */
-  def emit(n: Int, due0: Double, step: Double, recent: Boolean): GenFile = {
+  def emit(n: Int, due0: Double, step: Double): GenFile = {
     val sb = new java.lang.StringBuilder(n * 200)
     val first = nextOffset
     var i = 0
@@ -148,7 +136,7 @@ final class Gen(val seed: Long, topicDir: String) {
       val u = rnd.nextDouble()
       val off = nextOffset
       if (u < 0.80 && nLive > 0) {
-        val k = pickLive(recent)
+        val k = pickLive()
         line(sb, k, off, tomb = false); latest(k) = off; updates += 1
       } else if (u < 0.95 || nLive == 0) {
         val k =
@@ -159,7 +147,7 @@ final class Gen(val seed: Long, topicDir: String) {
         grow(k); line(sb, k, off, tomb = false); latest(k) = off; addLive(k)
         inserts += 1
       } else {
-        val k = pickLive(recent)
+        val k = pickLive()
         line(sb, k, off, tomb = true); removeLive(k); dead += k; tombstones += 1
       }
       stampDue(off, due0 + i * step)

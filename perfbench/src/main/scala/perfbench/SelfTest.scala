@@ -18,7 +18,7 @@ object SelfTest {
     def filesOf(seed: Long, tag: String): Seq[Array[Byte]] = {
       val g = new Gen(seed, { val d = s"$root/gen-$tag"; Files.createDirectories(Paths.get(d)); d })
       g.snapshot(2000, 2)
-      (1 to 3).foreach(i => g.emit(3000, i * 1000.0, 1.0, recent = i == 3))
+      (1 to 3).foreach(i => g.emit(3000, i * 1000.0, 1.0))
       g.files.map(f => Files.readAllBytes(Paths.get(s"$root/gen-$tag/${f.name}"))).toSeq
     }
     val (x, y, z) = (filesOf(a.seed, "a"), filesOf(a.seed, "b"), filesOf(a.seed + 1, "c"))
@@ -32,7 +32,7 @@ object SelfTest {
       val g = new Gen(a.seed, t.topic)
       g.snapshot(20000, 2)
       t.apply()
-      (1 to 3).foreach(_ => g.emit(4000, 0, 0, recent = false))
+      (1 to 3).foreach(_ => g.emit(4000, 0, 0))
       t.apply(maxFiles = Some(1))
       val cat = s"st_$tag"
       spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.connector.GraftCatalog].getName)
@@ -62,7 +62,7 @@ object SelfTest {
 
     // dropped tombstone: the model applies it, the engine never sees it
     val (t2, g2, _) = table("tomb")
-    val f = g2.emit(4000, 0, 0, recent = false)
+    val f = g2.emit(4000, 0, 0)
     val path = Paths.get(t2.topic, f.name)
     val lines = Files.readAllLines(path, UTF_8).asScala
     val victim = lines.indexWhere(_.contains("\"value\":null"))
